@@ -15,16 +15,33 @@ from ult_spark import functions as UF
 from ult_spark.grid import cells
 
 
+def _grid_edge_points() -> pd.DataFrame:
+    """Poles, the antimeridian, signed zeros, and exact cell borders (low,
+    middle and high) at every level; negative ids keep them apart from the
+    events."""
+    pts = [(90.0, 180.0), (-90.0, -180.0), (90.0, -180.0), (-90.0, 180.0),
+           (0.0, -0.0), (-0.0, 0.0), (-0.0, -0.0)]
+    for level in range(1, cells.MAX_LEVEL + 1):
+        n = 1 << level
+        pts += [(k * 180.0 / n - 90.0, k * 360.0 / n - 180.0) for k in (1, n // 2, n - 1)]
+    lat, lon = zip(*pts)
+    return pd.DataFrame({"event_id": -np.arange(1, len(pts) + 1), "lat": lat, "lon": lon})
+
+
 def test_native_vs_numpy_vs_duckdb(spark, sf_smoke):
     ev = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    for level in (4, 8, 12, 29):
+    edges = _grid_edge_points()
+    pts = ev.select(
+        "event_id", UF.event_lat().alias("lat"), UF.event_lon().alias("lon")
+    ).unionByName(spark.createDataFrame(edges))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_smoke}/events.parquet')"
+    )
+    con.register("edges", edges)
+    for level in range(cells.MAX_LEVEL + 1):
         got = (
-            ev.select(
-                "event_id",
-                UF.event_lat().alias("lat"),
-                UF.event_lon().alias("lon"),
-                UF.latlon_to_cell(UF.event_lat(), UF.event_lon(), level).alias("cell"),
-            )
+            pts.select("event_id", "lat", "lon", UF.latlon_to_cell("lat", "lon", level).alias("cell"))
             .orderBy("event_id")
             .toPandas()
         )
@@ -32,13 +49,11 @@ def test_native_vs_numpy_vs_duckdb(spark, sf_smoke):
         np_cells = cells.latlon_to_cell(got["lat"].to_numpy(), got["lon"].to_numpy(), level)
         assert np.array_equal(got["cell"].to_numpy(), np_cells), f"native != numpy at L{level}"
         # DuckDB oracle fragment
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_smoke}/events.parquet')"
-        )
         sql = (
             f"SELECT event_id, {UF.cell_sql(UF.EVENT_LAT_SQL, UF.EVENT_LON_SQL, level)} AS cell "
-            f"FROM events ORDER BY event_id"
+            f"FROM events UNION ALL "
+            f"SELECT event_id, {UF.cell_sql('lat', 'lon', level)} AS cell FROM edges "
+            f"ORDER BY event_id"
         )
         duck = con.execute(sql).df()
         assert np.array_equal(got["cell"].to_numpy(), duck["cell"].to_numpy()), f"native != duckdb at L{level}"

@@ -137,8 +137,8 @@ def test_pip_broadcast_scales_with_edges_not_cells(spark):
 
 
 def test_pip_refine_engines_agree(spark, sf_smoke):
-    """native / arrow (pandas UDF) / arrow_batch (mapInArrow) refine engines
-    are bit-identical."""
+    """native and arrow (pandas UDF reference kernel) refine engines are
+    bit-identical."""
     from ult_spark import functions as UF
     from ult_spark.ops.pip import pip_join
 
@@ -147,14 +147,66 @@ def test_pip_refine_engines_agree(spark, sf_smoke):
         .select("event_id", UF.event_lat().alias("lat"), UF.event_lon().alias("lon"))
     )
     sets = []
-    for engine in ("native", "arrow", "arrow_batch"):
+    for engine in ("native", "arrow"):
         sets.append(
             {
                 (r.event_id, r.poly_id)
                 for r in pip_join(pts, POLYS, refine=engine).select("event_id", "poly_id").collect()
             }
         )
-    assert sets[0] == sets[1] == sets[2] and len(sets[0]) > 0
+    assert sets[0] == sets[1] and len(sets[0]) > 0
+
+
+def _square_with_hole(ring_offsets: list[int]):
+    from ult_spark.geom.polyio import PackedPolygon
+
+    return PackedPolygon(
+        poly_id=1, name="sq", level=0,
+        ring_offsets=np.asarray(ring_offsets, dtype=np.int32),
+        xs=np.asarray([-20.0, 20.0, 20.0, -20.0, -10.0, -10.0, 10.0, 10.0]),
+        ys=np.asarray([-20.0, -20.0, 20.0, 20.0, -10.0, 10.0, 10.0, -10.0]),
+    )
+
+
+def test_index_cache_keys_on_ring_structure(spark):
+    """An outer square with a hole and the same 8 vertices as one ring have
+    different covers: neither the driver-side index cache nor the session's
+    index DataFrames may hand one layer the other's rows."""
+    from ult_spark.grid import compact as CZ
+    from ult_spark.ops.pip import _index_rows, build_cell_index
+
+    holed, one_ring = _square_with_hole([0, 4, 8]), _square_with_hole([0, 8])
+    covers = []
+    for poly in (holed, one_ring):
+        exp = CZ.uncompact(CZ.compact(polyfill(poly, 6)), 6).tolist()
+        assert sorted(c for c, _ in _index_rows([poly], 6)) == exp
+        got = [r.icell for r in build_cell_index(spark, [poly], 6).collect()]
+        assert sorted(got) == exp
+        covers.append(exp)
+    assert covers[0] != covers[1]
+
+
+def test_pip_index_built_once_per_session(spark, monkeypatch):
+    """Two pip_join calls in one session build the layer index once; a
+    session from newSession() builds its own and gets identical matches."""
+    from ult_spark.ops import pip as P
+
+    built = []
+    real = P._index_table
+
+    def counting(polys, index_level, kind):
+        built.append(kind)
+        return real(polys, index_level, kind)
+
+    monkeypatch.setattr(P, "_index_table", counting)
+    rows = [(i, -40.0 + i * 0.37, -120.0 + i * 1.13) for i in range(200)]
+    matches = []
+    for session in (spark.newSession(), spark.newSession()):
+        pts = session.createDataFrame(rows, "pid long, lat double, lon double")
+        for _ in range(2):
+            matches.append({(r.pid, r.poly_id) for r in P.pip_join(pts, POLYS).collect()})
+    assert built == ["inline", "inline"]
+    assert matches[0] and all(m == matches[0] for m in matches)
 
 
 def test_uncompact_native_matches_numpy(spark):

@@ -29,11 +29,19 @@ _MASKS = (
 )
 
 
-def _spread(v: Column) -> Column:
-    """Spread low 32 bits so bit i lands at bit 2i (native, codegen-able)."""
-    v = v.bitwiseAND(F.lit(0xFFFFFFFF))
+def _spread(v: Column, bits: int) -> Column:
+    """Spread ``v`` so bit i lands at bit 2i (native, codegen-able), for
+    ``v`` known to lie in ``[0, 2**bits)``.
+
+    Every step references ``v`` twice, so the expression tree holds 2^steps
+    copies of the input. For such ``v`` the 32-bit input mask and every
+    step with ``sh >= bits`` are no-ops (``v << sh`` lands wholly in bits
+    the step's mask clears), so they are left out: level 6 keeps 8 copies,
+    level 12 keeps 16, instead of 32. Bit-identical to ``grid.cells`` on
+    that range."""
     for sh, mask in _MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, sh))).bitwiseAND(F.lit(mask))
+        if sh < bits:
+            v = (v.bitwiseOR(F.shiftleft(v, sh))).bitwiseAND(F.lit(mask))
     return v
 
 
@@ -64,10 +72,14 @@ def grid_y(lat: Column | str, level: int) -> Column:
 
 
 def xy_to_cell(x: Column, y: Column, level: int) -> Column:
-    """Morton-interleave + level sentinel (native bit math → long cell id)."""
+    """Morton-interleave + level sentinel (native bit math → long cell id).
+
+    ``x`` and ``y`` must lie in ``[0, 2**level)`` — clamped by
+    :func:`grid_x`/:func:`grid_y`, wrapped by ``pmod`` or filtered to the
+    grid by every caller."""
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level {level} out of range [0, {MAX_LEVEL}]")
-    m = _spread(x).bitwiseOR(F.shiftleft(_spread(y), 1))
+    m = _spread(x, level).bitwiseOR(F.shiftleft(_spread(y, level), 1))
     return F.shiftleft(F.shiftleft(m, 1).bitwiseOR(F.lit(1)), 2 * (MAX_LEVEL - level))
 
 
@@ -266,8 +278,8 @@ def geohash_encode(lat: Column | str, lon: Column | str, precision: int = 6) -> 
     level ``5·p/2``; each 5-bit group indexes the base32 alphabet."""
     assert precision % 2 == 0 and 2 <= precision <= 12, "even precision only"
     bits = 5 * precision // 2
-    g = _spread(grid_y(lat, bits)).bitwiseOR(
-        F.shiftleft(_spread(grid_x(lon, bits)), 1)
+    g = _spread(grid_y(lat, bits), bits).bitwiseOR(
+        F.shiftleft(_spread(grid_x(lon, bits), bits), 1)
     )
     alphabet = F.array(*[F.lit(c) for c in GEOHASH32])
     chars = [

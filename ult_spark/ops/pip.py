@@ -9,22 +9,31 @@ big side.
 
 Stage 2 — exact ray-cast refine, two interchangeable engines:
 
-- ``refine="native"`` (default): the candidate map (cell → poly_id) and the
-  edge table (poly_id → packed edge arrays, ONE row per polygon) are two
-  separate small broadcasts joined on poly_id, so broadcast bytes scale as
-  Σcells + Σedges — never Σ(cells × edges) (round-1 verdict #5). The
-  even-odd crossing parity is evaluated with Spark higher-order functions
-  (filter over an index sequence + element_at) — pure JVM, no Arrow hop,
-  no second Python worker. Measured on this box: chaining a second Python
-  stage after the geotag UDF oversubscribes cores (2 worker sets + JVM
-  threads) and *anti-scales*; the native refine removes that entirely.
-- ``refine="arrow"``: the BASELINE-literal path — NumPy ray casting on
-  packed-ring Arrow arrays inside a scalar pandas UDF (self-contained
-  closure, no --py-files needed). Kept for parity testing and for payloads
-  where the polygon layer is too large to inline per cell.
+- ``refine="native"`` (default): each candidate row carries its polygon's
+  packed edge arrays. Under ``INLINE_EDGE_BUDGET_BYTES`` the edges are
+  inlined into the cell map (one broadcast join on the point stream);
+  above it the cell map (cell → poly_id) and the edge table (poly_id →
+  packed edge arrays, ONE row per polygon) are two separate broadcasts
+  joined on poly_id, so broadcast bytes scale as Σcells + Σedges — never
+  Σ(cells × edges) (round-1 verdict #5). The even-odd crossing parity is
+  evaluated with Spark higher-order functions (filter over an index
+  sequence + element_at) — pure JVM, no Arrow hop, no second Python
+  worker. Measured on this box: chaining a second Python stage after the
+  geotag UDF oversubscribes cores (2 worker sets + JVM threads) and
+  *anti-scales*; the native refine removes that entirely.
+- ``refine="arrow"``: the BASELINE-literal reference kernel — NumPy ray
+  casting on packed-ring Arrow arrays inside a scalar pandas UDF
+  (self-contained closure, no --py-files needed). Kept for parity testing.
 
 Both use the pinned IEEE-exact crossing rule (ult_spark/geom/pip.py), so
 results are bit-identical to each other and to the DuckDB oracle.
+
+Index lifetime: every broadcast index (cell map, inlined cell map, edge
+table) is built by one builder from an Arrow table, which Spark keeps as a
+local relation, and is kept per (SparkSession, layer content digest,
+level): the first call in a session pays the polyfill and the build, later
+calls — another ``pip_join``, a ``zonal_stats`` over the same layer —
+reuse the DataFrame. A new or restarted session builds its own.
 
 At 100 TB: the points side streams through scan→encode→join→refine in one
 whole-stage-codegen pipeline; the only shuffle in a PIP-aggregate job is the
@@ -34,8 +43,11 @@ are 16 bytes; the edge table is the layer's raw geometry, once).
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
@@ -49,16 +61,29 @@ DEFAULT_INDEX_LEVEL = 6
 
 # polyfill+compact is a pure function of (layer, level): memoized across
 # sessions so repeated pipeline runs skip the driver-side geometry work
-_INDEX_CACHE: dict[tuple[int, int], list[tuple]] = {}
+_INDEX_CACHE: dict[tuple[bytes, int], list[tuple[int, int]]] = {}
+
+
+def _layer_digest(polys: list[PackedPolygon]) -> bytes:
+    """Content digest of everything a layer index depends on — ids, ring
+    offsets and vertex coordinates, in layer order. Two layers that differ
+    only in how their vertices split into rings (a hole vs one ring) have
+    different covers and edges, so they must not share an index."""
+    h = hashlib.blake2b(digest_size=16)
+    for p in polys:
+        for a in (
+            np.int64(p.poly_id),
+            np.asarray(p.ring_offsets, dtype=np.int64),
+            np.asarray(p.xs, dtype=np.float64),
+            np.asarray(p.ys, dtype=np.float64),
+        ):
+            h.update(np.int64(a.size).tobytes())
+            h.update(np.ascontiguousarray(a).tobytes())
+    return h.digest()
 
 
 def _index_rows(polys: list[PackedPolygon], index_level: int) -> list[tuple]:
-    # key on GEOMETRY, not just ids — two layers sharing poly_ids (e.g. an
-    # edited layer) must not hit each other's cache
-    cache_key = (
-        hash(tuple((p.poly_id, p.xs.tobytes(), p.ys.tobytes()) for p in polys)),
-        index_level,
-    )
+    cache_key = (_layer_digest(polys), index_level)
     if cache_key in _INDEX_CACHE:
         return _INDEX_CACHE[cache_key]
     rows: list[tuple] = []
@@ -71,15 +96,74 @@ def _index_rows(polys: list[PackedPolygon], index_level: int) -> list[tuple]:
     return rows
 
 
+_EDGE_COLS = ("ex1", "ey1", "ex2", "ey2")
+_EDGE_DDL = ", ".join(f"{c} array<double>" for c in _EDGE_COLS)
+_INDEX_DDL = {
+    "cells": "icell long, poly_id long",
+    "inline": f"icell long, poly_id long, {_EDGE_DDL}",
+    "edges": f"poly_id long, {_EDGE_DDL}",
+}
+
+
+def _list_column(parts: list[np.ndarray]) -> pa.ListArray:
+    offsets = np.zeros(len(parts) + 1, dtype=np.int32)
+    np.cumsum([len(a) for a in parts], out=offsets[1:])
+    values = np.concatenate(parts) if parts else np.empty(0, dtype=np.float64)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
+
+
+def _index_table(
+    polys: list[PackedPolygon], index_level: int | None, kind: str
+) -> pa.Table:
+    """The rows of one index ``kind`` as an Arrow table (see _INDEX_DDL)."""
+    if kind == "edges":
+        cols = {"poly_id": np.array([p.poly_id for p in polys], dtype=np.int64)}
+        edges = [p.edges() for p in polys]
+    else:
+        rows = _index_rows(polys, index_level)
+        cols = {
+            "icell": np.array([c for c, _ in rows], dtype=np.int64),
+            "poly_id": np.array([pid for _, pid in rows], dtype=np.int64),
+        }
+        if kind == "inline":
+            by_id = {p.poly_id: p.edges() for p in polys}
+            edges = [by_id[pid] for _, pid in rows]
+    if kind != "cells":
+        for k, name in enumerate(_EDGE_COLS):
+            cols[name] = _list_column([e[k] for e in edges])
+    return pa.table(cols)
+
+
+def _session_index(
+    spark: SparkSession,
+    polys: list[PackedPolygon],
+    index_level: int | None,
+    kind: str,
+) -> DataFrame:
+    """The layer's index of ``kind``, built once per session from Arrow.
+
+    An Arrow table under ``spark.sql.execution.arrow.localRelationThreshold``
+    becomes a local relation the broadcast reads in place, where a list of
+    Python rows becomes an RDD the JVM unpickles again in every query. The
+    DataFrame is kept on the session object itself, keyed on the layer's
+    content digest and level, so later calls in the same session reuse it
+    and a new or restarted session (another object) builds its own."""
+    store = spark.__dict__.setdefault("_ult_layer_indexes", {})
+    key = (_layer_digest(polys), index_level, kind)
+    if key not in store:
+        table = _index_table(polys, index_level, kind)
+        store[key] = spark.createDataFrame(table, _INDEX_DDL[kind])
+    return store[key]
+
+
 def build_cell_index(
     spark: SparkSession,
     polys: list[PackedPolygon],
     index_level: int = DEFAULT_INDEX_LEVEL,
 ) -> DataFrame:
-    """(icell, poly_id) candidate map at ``index_level``."""
-    return spark.createDataFrame(
-        _index_rows(polys, index_level), "icell long, poly_id long"
-    )
+    """(icell, poly_id) candidate map at ``index_level`` — built once per
+    session and layer from Arrow (:func:`_session_index`)."""
+    return _session_index(spark, polys, index_level, "cells")
 
 
 # inline-edges broadcast budget: below this the single-join layout wins
@@ -92,33 +176,19 @@ def build_inline_index(
     spark: SparkSession, polys: list[PackedPolygon], index_level: int
 ) -> DataFrame:
     """(icell, poly_id, edge arrays) — edges inlined per covering cell row;
-    only used under INLINE_EDGE_BUDGET_BYTES."""
-    edges = {p.poly_id: tuple(a.tolist() for a in p.edges()) for p in polys}
-    rows = [
-        (int(c), pid, *edges[pid]) for c, pid in _index_rows(polys, index_level)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "icell long, poly_id long, ex1 array<double>, ey1 array<double>, "
-        "ex2 array<double>, ey2 array<double>",
-    )
+    only used under INLINE_EDGE_BUDGET_BYTES. Built once per session and
+    layer from Arrow (:func:`_session_index`)."""
+    return _session_index(spark, polys, index_level, "inline")
 
 
 def build_edge_index(spark: SparkSession, polys: list[PackedPolygon]) -> DataFrame:
-    """(poly_id, ex1, ey1, ex2, ey2) — ONE row per polygon.
+    """(poly_id, ex1, ey1, ex2, ey2) — ONE row per polygon, built once per
+    session and layer from Arrow (:func:`_session_index`).
 
     Round-1 verdict #5: inlining each polygon's full edge arrays into every
     covering-cell row made the broadcast Σ(cells × edges); broadcasting the
     cell map and the edge table separately keeps it Σcells + Σedges."""
-    rows = []
-    for p in polys:
-        ex1, ey1, ex2, ey2 = (a.tolist() for a in p.edges())
-        rows.append((p.poly_id, ex1, ey1, ex2, ey2))
-    return spark.createDataFrame(
-        rows,
-        "poly_id long, ex1 array<double>, ey1 array<double>, "
-        "ex2 array<double>, ey2 array<double>",
-    )
+    return _session_index(spark, polys, None, "edges")
 
 
 # ---------------------------------------------------------------------------
@@ -439,39 +509,6 @@ def _refine_udf(polys: list[PackedPolygon]):
     return pip_refine
 
 
-def _refine_map_in_arrow(cand: DataFrame, polys: list[PackedPolygon],
-                         lat: str, lon: str) -> DataFrame:
-    """mapInArrow engine (SURVEY §2.10 J2 mapping): ray-cast directly on
-    Arrow RecordBatches — no pandas conversion at all. SELF-CONTAINED
-    closure (plain NumPy edge arrays + column names captured)."""
-    edges_by_id = {p.poly_id: p.edges() for p in polys}
-    lat_i = cand.columns.index(lat)
-    lon_i = cand.columns.index(lon)
-    pid_i = cand.columns.index("poly_id")
-
-    def ray(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            la = b.column(lat_i).to_numpy(zero_copy_only=False)
-            lo = b.column(lon_i).to_numpy(zero_copy_only=False)
-            pid = b.column(pid_i).to_numpy(zero_copy_only=False)
-            keep = np.zeros(len(la), dtype=bool)
-            for p in np.unique(pid):
-                m = pid == p
-                ex1, ey1, ex2, ey2 = edges_by_id[int(p)]
-                cy = la[m][:, None]
-                cx = lo[m][:, None]
-                straddle = (ey1[None, :] > cy) != (ey2[None, :] > cy)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xint = (ex2 - ex1)[None, :] * (cy - ey1[None, :]) / (ey2 - ey1)[None, :] + ex1[None, :]
-                keep[m] = ((straddle & (cx < xint)).sum(axis=1) & 1).astype(bool)
-            yield b.filter(pa.array(keep))
-
-    return cand.mapInArrow(ray, cand.schema)
-
-
 def pip_join(
     points: DataFrame,
     polys: list[PackedPolygon],
@@ -530,12 +567,6 @@ def pip_join(
             .where(refine_fn(F.col(lat), F.col(lon), F.col("poly_id")))
             .drop("_icell", "icell")
         )
-    elif refine == "arrow_batch":
-        index_df = build_cell_index(spark, polys, index_level)
-        joined = cand.join(
-            F.broadcast(index_df), cand["_icell"] == index_df["icell"], "inner"
-        )
-        matched = _refine_map_in_arrow(joined, polys, lat, lon).drop("_icell", "icell")
     else:
         raise ValueError(f"unknown refine engine {refine!r}")
     if how == "inner":

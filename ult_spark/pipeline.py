@@ -1,7 +1,7 @@
 """Flagship pipeline assembly (SURVEY.md §3 E1/E2).
 
 The headline BASELINE metric path: points → cell encode (native, multi-res)
-→ PIP join vs the polygon layer (broadcast compacted index + Arrow ray-cast)
+→ PIP join vs the polygon layer (broadcast compacted index + native ray-cast)
 → salted per-tile aggregate → pyramid rollup → hottest tiles.
 
 On the driver's testdata the point source is `events` with the pinned
@@ -27,11 +27,12 @@ def pages_pipeline(
 ) -> DataFrame:
     """The BASELINE-metric pipeline over a Common-Crawl-style pages table:
 
-    geotag parse (Arrow UDF, batched) → multi-res cell encode (native) →
-    PIP join vs the admin layer (broadcast compacted index + Arrow refine)
-    → salted per-tile aggregate at the finest level → exact pyramid rollup.
+    geotag parse (native regex) → multi-res cell encode (native) →
+    PIP join vs the admin layer (broadcast layer index, built once per
+    session, + native ray-cast refine) → salted per-tile aggregate at the
+    finest level → exact pyramid rollup.
 
-    One Arrow-batch pipeline per input split until the single groupBy
+    One codegen pipeline per input split until the single groupBy
     shuffle: scan → geotag → encode → broadcast-join → refine are all
     stage-local (SURVEY.md §4 pipelining note).
 

@@ -2,9 +2,44 @@
 
 from __future__ import annotations
 
+import math
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+
+def host_cores() -> int:
+    """Cores this process may use: ``SPARK_GRAFT_CPUS`` when set, else the
+    CPU affinity mask capped by the cgroup v2 ``cpu.max`` quota."""
+    pinned = os.environ.get("SPARK_GRAFT_CPUS")
+    if pinned:
+        return max(1, int(pinned))
+    if hasattr(os, "sched_getaffinity"):
+        cores = len(os.sched_getaffinity(0))
+    else:
+        cores = os.cpu_count() or 1
+    try:
+        quota, period = Path("/sys/fs/cgroup/cpu.max").read_text().split()[:2]
+        if quota != "max":
+            cores = min(cores, max(1, math.ceil(int(quota) / int(period))))
+    except (OSError, ValueError):
+        pass
+    return cores
+
+
+def driver_memory() -> str | None:
+    """Half of the host's ``MemTotal`` (``/proc/meminfo``) in MiB, or None
+    (Spark's own default) where that file does not exist. A fixed large heap
+    on a smaller host lets the JVM grow until the kernel kills it."""
+    try:
+        meminfo = Path("/proc/meminfo").read_text()
+    except OSError:
+        return None
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{int(line.split()[1]) // 2048}m"
+    return None
 
 
 def get_spark(
@@ -17,11 +52,15 @@ def get_spark(
 
     Defaults follow BASELINE.md protocol: AQE on, Arrow on with large
     record batches (the encode/PIP stages are Arrow-batch pipelines),
-    shuffle partitions scaled to 2x cores.
+    shuffle partitions scaled to 2x cores. ``local[*]`` runs on
+    :func:`host_cores` threads; the driver heap defaults to
+    :func:`driver_memory` (``ULT_DRIVER_MEM`` overrides it).
     """
     master = master or os.environ.get("ULT_SPARK_MASTER", "local[*]")
-    cores = os.cpu_count() or 8
-    if master.startswith("local[") and master != "local[*]":
+    cores = host_cores()
+    if master == "local[*]":
+        master = f"local[{cores}]"
+    elif master.startswith("local["):
         try:
             cores = int(master[len("local["):-1])
         except ValueError:
@@ -50,9 +89,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("ULT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
     )
+    memory = os.environ.get("ULT_DRIVER_MEM") or driver_memory()
+    if memory:
+        b = b.config("spark.driver.memory", memory)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
